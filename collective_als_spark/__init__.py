@@ -17,8 +17,22 @@ Layout:
   streaming    — Structured Streaming operators
 """
 
-from collective_als_spark.cmf import CollectiveALS, CollectiveALSModel
-from collective_als_spark.session import get_spark
-
 __all__ = ["CollectiveALS", "CollectiveALSModel", "get_spark"]
 __version__ = "0.1.0"
+
+# Exports resolve on first access: the worker daemon (``pydaemon``) is
+# imported as a submodule of this package and must not pull pyspark.sql,
+# numpy and pandas into every Python worker process.
+_EXPORTS = {
+    "CollectiveALS": "collective_als_spark.cmf",
+    "CollectiveALSModel": "collective_als_spark.cmf",
+    "get_spark": "collective_als_spark.session",
+}
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
+
+    return getattr(importlib.import_module(_EXPORTS[name]), name)

@@ -7,15 +7,17 @@ jobs plus a reflection hack to recover the encoder.
 
 Rebuild, 100 TB shapes for both modes:
 
-- ``exact=True`` — two-phase global rank: a ``repartitionByRange``
-  shuffle on the sort key (the same range shuffle the reference's
-  ``sortBy`` does), per-partition ``row_number`` (window partitioned by
-  ``spark_partition_id`` — never a single-task global window), then a
-  broadcast join against the tiny per-partition cumulative-offset table.
-  Global rank = local rank + partition offset, exactly ``zipWithIndex``
-  semantics, fully parallel. Slice bounds are kept as floats
-  (``lo*n <= rk < hi*n``) to match the reference's fractional-boundary
-  behavior (``Utils.scala:24-27``) bit-for-bit.
+- ``exact=True`` — two-phase global rank: bucket every row on the
+  leading sort key by approximate quantile cuts of that key (one small
+  aggregate job), hash-shuffle on the bucket, ``row_number`` within each
+  bucket (never a single-task global window), then a broadcast join
+  against the tiny per-bucket cumulative-offset table. Global rank =
+  local rank + bucket offset, exactly ``zipWithIndex`` semantics, fully
+  parallel. The bucket is a function of the row's values, not of where
+  the row landed, so it stays consistent under AQE partition
+  coalescing. Slice bounds are kept as floats (``lo*n <= rk < hi*n``)
+  to match the reference's fractional-boundary behavior
+  (``Utils.scala:24-27``) bit-for-bit.
 - ``exact=False`` — approx quantile cuts on the time column (no rank at
   all); boundaries off by at most the approx-quantile error. Rows with
   a NULL time sort first in exact mode, so the approx path routes them
@@ -25,8 +27,9 @@ Rebuild, 100 TB shapes for both modes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _cumulative_bounds(weights: list[float]) -> list[tuple[float, float]]:
@@ -41,6 +44,83 @@ def _cumulative_bounds(weights: list[float]) -> list[tuple[float, float]]:
     return cum
 
 
+# Leading-key buckets per shuffle partition: the window stage hashes
+# bucket ids onto partitions, so several buckets per partition keep the
+# load even when some collide.
+_BUCKETS_PER_PARTITION = 4
+_QUANTILE_TYPES = (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType)
+
+
+def _leading_key(df: DataFrame, col) -> tuple[Column, bool, bool]:
+    """(key, descending, nulls_first) of the first ordering column, read
+    from its column node: a plain column sorts ascending with nulls
+    first; ``.desc()``, ``.asc_nulls_last()``, ... wrap the key in a
+    sort order."""
+    col = F.col(col) if isinstance(col, str) else col
+    node = col._jc.node()
+    if node.getClass().getSimpleName() != "SortOrder":
+        return col, False, True
+    jvm = df.sparkSession.sparkContext._jvm
+    return (
+        Column(jvm.org.apache.spark.sql.Column(node.child())),
+        "Descending" in node.sortDirection().getClass().getSimpleName(),
+        "NullsFirst" in node.nullOrdering().getClass().getSimpleName(),
+    )
+
+
+def _bucketed(df: DataFrame, order_cols: list) -> DataFrame:
+    """``df`` plus ``_bk``, hash-partitioned on it: the bucket of the
+    leading order key among approximate quantile cuts of that key.
+
+    ``_bk`` never decreases along ``order_cols`` order and is a function
+    of the row's values alone, so every branch that reads the exchange
+    agrees on it however AQE coalesces each read (``spark_partition_id``
+    after a range shuffle does not: two reads of one exchange can be
+    coalesced differently, and the ranks then stop being a permutation).
+    The cuts are collected eagerly (one small aggregate job), so every
+    execution of the returned plan buckets alike. A leading key that is
+    neither numeric nor a date/timestamp gets a single bucket.
+    """
+    key, desc, nulls_first = _leading_key(df, order_cols[0])
+    n_buckets = _BUCKETS_PER_PARTITION * int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    key_type = df.select(key).schema[0].dataType
+    cuts = []
+    if isinstance(key_type, _QUANTILE_TYPES):
+        probs = [i / n_buckets for i in range(1, n_buckets)]
+        q = df.agg(F.percentile_approx(key, probs).alias("q")).first()["q"]
+        cuts = sorted(set(q or []))
+    if cuts:
+        arr = F.array(*[F.lit(c).cast(key_type) for c in cuts])
+        passed = F.filter(arr, (lambda c: c >= key) if desc else (lambda c: c <= key))
+        bucket = F.when(key.isNull(), 0 if nulls_first else len(cuts)).otherwise(
+            F.size(passed)
+        )
+    else:
+        bucket = F.lit(0)
+    return df.withColumn("_bk", bucket.cast("int")).repartition("_bk")
+
+
+def _bucket_offsets(sums: DataFrame, total_col: str) -> DataFrame:
+    """(_bk, _off, total_col) from one ``(_bk, _cnt)`` row per bucket:
+    the exclusive prefix sum of ``_cnt`` in bucket order and the grand
+    total. The counts are packed into one sorted array and expanded with
+    higher-order functions, so no un-partitioned window enters the plan
+    (O(B^2) work for B buckets is negligible)."""
+    packed = sums.agg(F.sort_array(F.collect_list(F.struct("_bk", "_cnt"))).alias("pc"))
+    return packed.select(
+        F.explode(
+            F.expr(
+                "transform(pc, (x, i) -> struct("
+                "x._bk AS _bk, "
+                "aggregate(slice(pc, 1, i), 0L, (acc, y) -> acc + y._cnt) AS _off, "
+                f"aggregate(pc, 0L, (acc, y) -> acc + y._cnt) AS {total_col}))"
+            )
+        ).alias("s")
+    ).select("s.*")
+
+
 def global_rank(
     df: DataFrame,
     order_cols: list,
@@ -48,39 +128,19 @@ def global_rank(
 ) -> DataFrame:
     """Exact 0-based global rank without a global window.
 
-    Range-shuffle on the ordering key, rank within each partition, then
-    add the partition's cumulative offset (tiny broadcast join). Also
-    attaches ``_n`` (total rows) so callers can cut by fraction without
-    a separate count job.
+    Bucket rows on the leading order key (:func:`_bucketed`), rank within
+    each bucket, then add the bucket's cumulative offset (tiny broadcast
+    join). Also attaches ``_n`` (total rows) so callers can cut by
+    fraction without a separate count job.
     """
-    part = df.repartitionByRange(*order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy("_pid").orderBy(*order_cols)
+    part = _bucketed(df, order_cols)
+    w_local = Window.partitionBy("_bk").orderBy(*order_cols)
     ranked_local = part.withColumn("_lrk", F.row_number().over(w_local) - F.lit(1))
-
-    counts = ranked_local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    # Cumulative offsets over the tiny per-partition-count frame (one
-    # row per shuffle partition; shares the range exchange with
-    # ranked_local via ReusedExchange). Computed by packing the counts
-    # into one sorted array and expanding with higher-order functions —
-    # no un-partitioned window anywhere in the plan (O(P^2) work for
-    # P = shuffle partitions is negligible).
-    packed = counts.agg(F.sort_array(F.collect_list(F.struct("_pid", "_cnt"))).alias("pc"))
-    offsets = packed.select(
-        F.explode(
-            F.expr(
-                "transform(pc, (x, i) -> struct("
-                "x._pid AS _pid, "
-                "aggregate(slice(pc, 1, i), 0L, (acc, y) -> acc + y._cnt) AS _off, "
-                "aggregate(pc, 0L, (acc, y) -> acc + y._cnt) AS _n))"
-            )
-        ).alias("s")
-    ).select("s.*")
+    counts = part.groupBy("_bk").agg(F.count(F.lit(1)).alias("_cnt"))
     return (
-        ranked_local.join(F.broadcast(offsets), "_pid")
+        ranked_local.join(F.broadcast(_bucket_offsets(counts, "_n")), "_bk")
         .withColumn(rank_col, (F.col("_lrk") + F.col("_off")).cast("long"))
-        .drop("_pid", "_lrk", "_off")
+        .drop("_bk", "_lrk", "_off")
     )
 
 
@@ -95,19 +155,17 @@ def global_cumsum(
     ``order_cols`` order (sum of all strictly-preceding rows), without a
     single-task global window.
 
-    Same two-phase shape as :func:`global_rank`: range-shuffle on the
-    ordering key, per-partition window cumsum, then add the partition's
-    cumulative offset via a tiny broadcast join (one row per shuffle
-    partition). Linear work per row — replaces the O(V²)
-    ``aggregate(slice(arr, 1, i))`` prefix-sum-over-packed-array shape,
-    which re-scans the prefix per element. Also attaches ``total_col``
-    (grand total) so callers can compute shares without a second pass.
+    Same two-phase shape as :func:`global_rank`: bucket on the leading
+    order key, per-bucket window cumsum, then add the bucket's
+    cumulative offset via a tiny broadcast join. Linear work per row —
+    replaces the O(V²) ``aggregate(slice(arr, 1, i))``
+    prefix-sum-over-packed-array shape, which re-scans the prefix per
+    element. Also attaches ``total_col`` (grand total) so callers can
+    compute shares without a second pass.
     """
-    part = df.repartitionByRange(*order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
+    part = _bucketed(df, order_cols)
     w_local = (
-        Window.partitionBy("_pid")
+        Window.partitionBy("_bk")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -115,25 +173,12 @@ def global_cumsum(
         "_lcum",
         F.coalesce(F.sum(value_col).over(w_local), F.lit(0)).cast("long"),
     )
-    sums = part.groupBy("_pid").agg(F.sum(value_col).cast("long").alias("_cnt"))
-    # O(P²) offsets over the one-row-per-partition frame — same
-    # deliberately-tiny pattern as global_rank (P = shuffle partitions).
-    packed = sums.agg(F.sort_array(F.collect_list(F.struct("_pid", "_cnt"))).alias("pc"))
-    offsets = packed.select(
-        F.explode(
-            F.expr(
-                "transform(pc, (x, i) -> struct("
-                "x._pid AS _pid, "
-                "aggregate(slice(pc, 1, i), 0L, (acc, y) -> acc + y._cnt) AS _off, "
-                "aggregate(pc, 0L, (acc, y) -> acc + y._cnt) AS _tot))"
-            )
-        ).alias("s")
-    ).select("s.*")
+    sums = part.groupBy("_bk").agg(F.sum(value_col).cast("long").alias("_cnt"))
     return (
-        local.join(F.broadcast(offsets), "_pid")
+        local.join(F.broadcast(_bucket_offsets(sums, "_tot")), "_bk")
         .withColumn(cumsum_col, (F.col("_lcum") + F.col("_off")).cast("long"))
         .withColumn(total_col, F.col("_tot"))
-        .drop("_pid", "_lcum", "_off", "_tot")
+        .drop("_bk", "_lcum", "_off", "_tot")
     )
 
 
@@ -156,8 +201,6 @@ def split_chronologically(
     cum = _cumulative_bounds(weights)
 
     if not exact:
-        from pyspark.sql import types as T
-
         is_ts = isinstance(df.schema[time_col].dataType, T.TimestampType)
         num_col = "__split_us" if is_ts else time_col
         ndf = (

@@ -381,7 +381,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-vocabulary coverage curve: fraction of corpus token
     mass covered by the top-k most frequent words, at several k — the
     diminishing-returns readout that sizes a vocabulary. Word ranking
-    uses the two-phase ``global_rank`` (range shuffle + partition-local
+    uses the two-phase ``global_rank`` (leading-key buckets + bucket-local
     rank + broadcast offsets, no single-task global window); the k
     probe frame is 4 literal rows broadcast against the vocab.
     """

@@ -14,7 +14,7 @@ candidate generation is always fingerprint-banded (never all-pairs),
 floats that cross the engine boundary are quantized to integer
 units (micro-bits, cents) so sums are order-independent and class
 boundaries are exact, global cumulatives go through the two-phase
-range-shuffle helpers, and every window is key-partitioned.
+bucketed helpers, and every window is key-partitioned.
 """
 
 from __future__ import annotations
@@ -810,8 +810,8 @@ def pareto_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the thing a naive `Window.orderBy` turns into a
     single-task sort at scale.
 
-    Scale: reuses `operators/split.py::global_cumsum` — range-shuffle
-    on the ordering key, per-partition window, tiny per-partition
+    Scale: reuses `operators/split.py::global_cumsum` — bucket
+    on the leading ordering key, per-bucket window, tiny per-bucket
     offset broadcast; no un-partitioned window anywhere. Revenue is
     exact integer cents, and the A/B/C boundaries compare
     cum*10 <= tot*{7,9} in EXACT integer arithmetic, so class

@@ -1441,8 +1441,8 @@ def vocab_top_p_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nucleus (top-p) vocabulary truncation: keep the most frequent
     words that together cover 90% of token mass — the distributional
     cutoff used for vocab pruning and sampling. Cumulative mass uses the
-    two-phase ``global_cumsum`` (operators/split.py): range-shuffle on
-    (n desc, word), per-partition window cumsum, broadcast offset add —
+    two-phase ``global_cumsum`` (operators/split.py): bucket on
+    n desc, per-bucket window cumsum over (n desc, word), broadcast offset add —
     linear work per vocab entry and no single-task global window. (The
     round-2 packed-array formulation was O(V²): ``aggregate(slice(arr,
     1, i))`` re-scanned the prefix for every element — slower than the

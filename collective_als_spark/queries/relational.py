@@ -297,7 +297,7 @@ def star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def chrono_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2: global chronological rank (zipWithIndex analog) — reference
-    Utils.scala:19. Two-phase rank (range shuffle + per-partition
+    Utils.scala:19. Two-phase rank (leading-key buckets + per-bucket
     row_number + offset join): no single-task global window."""
     from collective_als_spark.operators.split import global_rank
 

@@ -5,6 +5,13 @@ threads, one JVM). The config choices are nonetheless cluster-shaped:
 AQE on (runtime coalesce + skew-join handling), Arrow on (pandas-UDF
 solver path), UTC session timezone (duckdb-oracle comparison), and a
 shuffle-partition count that callers can widen for real clusters.
+
+Python workers fork from ``collective_als_spark.pydaemon`` instead of
+``pyspark.daemon``: it stops ``zipimporter`` from re-reading the
+pyspark archive at the start of every task (see that module), which
+cuts a few hundred milliseconds from every Arrow/pandas task. The
+package root goes on the executors' ``PYTHONPATH`` so the daemon
+imports from any working directory.
 """
 
 from __future__ import annotations
@@ -13,6 +20,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _MEM_UNITS = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
 
 
@@ -63,9 +71,17 @@ def get_spark(
         # Spark has no nanos timestamp — read as long, convert in loader
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    conf = {
+        "spark.python.daemon.module": "collective_als_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
+    }
     for k, v in (extra_conf or {}).items():
         if k == "spark.driver.extraJavaOptions" and jvm_opts:
             v = f"{jvm_opts} {v}"  # merge, don't silently drop the pre-touch
+        if k == "spark.executorEnv.PYTHONPATH":
+            v = os.pathsep.join((_PACKAGE_ROOT, v))  # the daemon must stay importable
+        conf[k] = v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     if jvm_opts and "spark.driver.extraJavaOptions" not in (extra_conf or {}):
         builder = builder.config("spark.driver.extraJavaOptions", jvm_opts)

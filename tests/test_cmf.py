@@ -165,6 +165,18 @@ def test_recommend_topk_guard(spark):
         )
 
 
+def test_recommend_topk_empty_items(spark):
+    from collective_als_spark.cmf import CollectiveALS
+    from collective_als_spark.cmf.recommend import recommend_topk
+
+    df = _synth_ratings(spark)
+    model = CollectiveALS("user", "item", rank=4, max_iter=1, seed=3).fit(df)
+    items = model.factors_for("item").filter(F.lit(False))
+    recs = recommend_topk(model.factors_for("user"), items, k=3)
+    assert recs.columns == ["id", "rec_id", "score", "rk"]
+    assert recs.collect() == []
+
+
 def test_per_entity_num_blocks(spark):
     """Reference API parity: numBlocks is per entity
     (CollectiveALS.scala:29-30,63-66). Dict form and the fluent

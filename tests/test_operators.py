@@ -80,7 +80,7 @@ def test_checked_cast_overflow_raises(spark):
 
 
 def test_global_rank_matches_window_semantics(spark, sf_med):
-    """Two-phase rank (range shuffle + per-partition row_number +
+    """Two-phase rank (leading-key buckets + per-bucket row_number +
     offset join) must equal a single global window's row_number."""
     from pyspark.sql import Window
 
@@ -99,6 +99,79 @@ def test_global_rank_matches_window_semantics(spark, sf_med):
         ).collect()
     }
     assert got == exp
+
+
+def _rank_input(spark, n):
+    """n rows with a scrambled time column and a (u, i) tie-break."""
+    return spark.range(n).select(
+        (F.col("id") * 7919 % 1000).cast("int").alias("u"),
+        (F.col("id") * 104729 % 5000).cast("int").alias("i"),
+        (F.lit(1_000_000_000) + F.col("id") * 2654435761 % n).alias("ts"),
+    )
+
+
+def test_global_rank_is_permutation_under_aqe(spark):
+    """With AQE coalescing on, the ranks are exactly 0..n-1. Keying the
+    local rank on spark_partition_id() after the range shuffle broke
+    this at 200k rows: the two reads of the exchange coalesced
+    differently."""
+    from collective_als_spark.operators.split import global_rank
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    n = 200_000
+    df = _rank_input(spark, n).persist()
+    try:
+        got = global_rank(df, [F.col("ts"), F.col("u"), F.col("i")]).agg(
+            F.count(F.lit(1)).alias("c"),
+            F.countDistinct("_rk").alias("d"),
+            F.min("_rk").alias("lo"),
+            F.max("_rk").alias("hi"),
+            F.max("_n").alias("n"),
+        ).first()
+        assert got.asDict() == {"c": n, "d": n, "lo": 0, "hi": n - 1, "n": n}
+
+        train, hold = split_chronologically(df, [0.99, 0.01], "ts", tie_break=["u", "i"])
+        train, hold = train.persist(), hold.persist()
+        try:
+            assert (train.count(), hold.count()) == (198_000, 2_000)
+            assert train.agg(F.max("ts")).first()[0] <= hold.agg(F.min("ts")).first()[0]
+        finally:
+            train.unpersist()
+            hold.unpersist()
+    finally:
+        df.unpersist()
+
+
+def test_global_rank_explicit_sort_orders(spark):
+    """A leading key with an explicit direction and NULL placement
+    buckets in its sort order."""
+    from pyspark.sql import Window
+
+    from collective_als_spark.operators.split import global_cumsum, global_rank
+
+    rows = [(i, (i * 37) % 101 if i % 17 else None) for i in range(2000)]
+    df = spark.createDataFrame(rows, "id long, n long")
+    n = F.col("n")
+    for lead in (n.desc(), n.asc_nulls_last(), n.desc_nulls_first()):
+        order = [lead, F.col("id")]
+        got = {r.id: r._rk for r in global_rank(df, order).collect()}
+        w = Window.orderBy(*order)
+        exp = {
+            r.id: r.rk
+            for r in df.select("id", (F.row_number().over(w) - 1).alias("rk")).collect()
+        }
+        assert got == exp, lead
+    order = [n.desc(), F.col("id")]
+    filled = df.fillna(0)
+    cum = {r.id: r._cum for r in global_cumsum(filled, order, "n").collect()}
+    before = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
+    exp_cum = {
+        r.id: r.c
+        for r in filled.select(
+            "id", F.coalesce(F.sum("n").over(before), F.lit(0)).alias("c")
+        ).collect()
+    }
+    assert cum == exp_cum
 
 
 def test_exact_split_no_global_window(spark, sf_med):
